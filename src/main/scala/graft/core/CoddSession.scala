@@ -172,10 +172,7 @@ final class CoddSession private (
     * `collect_stable ∪ collect_recent` after stabilization).
     */
   def evaluate[T](expr: Expr[T]): Dataset[T] = {
-    if (sequentialStabilization) {
-      expr.relDeps.toSeq.sorted.foreach(stabilizeRelation)
-      expr.viewDeps.toSeq.sorted.foreach(stabilizeView)
-    } else stabilizeFused(expr.relDeps, expr.viewDeps)
+    stabilizeFused(expr.relDeps, expr.viewDeps)
     val s = collectStable(expr)
     val memo = newMemo
     // After stabilization every leaf's recent is provably empty (the driver
@@ -225,6 +222,12 @@ final class CoddSession private (
     c
   }
 
+  /** Every relation and view instance of this session (specs inspect
+    * their counts).
+    */
+  private[core] def instances: Iterable[Instance[Any]] =
+    relations.values.map(_.instance) ++ views.values.map(_.instance)
+
   private var closed = false
 
   /** Release all executor storage held by this session's relation and view
@@ -247,10 +250,7 @@ final class CoddSession private (
     * stored views appear as `view_<id>`. Returns the lazy DataFrame.
     */
   def sql(query: String): DataFrame = {
-    if (sequentialStabilization) {
-      relations.keys.toSeq.sorted.foreach(stabilizeRelation)
-      views.keys.toSeq.sorted.foreach(stabilizeView)
-    } else stabilizeFused(relations.keys, views.keys)
+    stabilizeFused(relations.keys, views.keys)
     relations.keys.toSeq.sorted.foreach { n =>
       relations(n).instance.stable.toDF().createOrReplaceTempView(n)
     }
@@ -262,32 +262,6 @@ final class CoddSession private (
 
   // ------------------------------------------------------------ stabilization
 
-  /** Reference: database.rs:317-336. Missing names are ignored here; the
-    * collector raises `InstanceNotFound` when the leaf is actually read —
-    * matching the reference's behavior.
-    */
-  private def stabilizeRelation(name: String): Unit =
-    relations.get(name).foreach { e =>
-      if (!e.stabilizing) {
-        e.stabilizing = true
-        try while (e.instance.changed()) e.dependents.foreach(viewDeltaStep)
-        finally e.stabilizing = false
-      }
-    }
-
-  /** Reference: database.rs:287-314. */
-  private def stabilizeView(ref: Int): Unit =
-    views.get(ref).foreach { v =>
-      if (!v.stabilizing) {
-        v.stabilizing = true
-        try {
-          v.dependeeRels.toSeq.sorted.foreach(stabilizeRelation)
-          v.dependeeViews.toSeq.sorted.foreach(stabilizeView)
-          while (v.instance.changed()) v.dependents.foreach(viewDeltaStep)
-        } finally v.stabilizing = false
-      }
-    }
-
   /** One maintenance step of a view: compute the delta of its defining
     * expression and stage it (reference: instance.rs:284-290). Duplicate
     * delivery is harmless: promotion anti-joins against the view's stable set.
@@ -298,68 +272,56 @@ final class CoddSession private (
     v.instance.insertDistinct(collectRecent(v.expr, newMemo))
   }
 
-  /** Stabilize EVERY relation and view, batching each round of view
-    * promotions into ONE Spark action (SCALE.md r13 §fanout). The
-    * sequential path pays one job per dependent view per epoch — and the
-    * r12 fan-out measurement showed the per-view marginal cost (~0.24 s at
-    * N=32) converging to Spark's per-job scheduling floor, not to delta
-    * work. Here every view on the current DAG frontier PLANS its promotion
-    * ([[Instance.prepareChanged]] — a lazy checkpoint, no action), then a
-    * single union-of-counts action materializes all of them at once: N
-    * delta-sized maintenance plans ride one job's scheduling overhead, and
-    * on a cluster their tiny stages pack the executors in parallel instead
-    * of serializing on the driver.
+  /** Stabilize EVERY relation and view, batching each round of promotions
+    * into one Spark action per dependency wave (SCALE.md r13 §fanout): a
+    * per-instance epoch loop would pay one job per dependent view per
+    * epoch, and the r12 fan-out measurement showed that per-view cost
+    * (~0.24 s at N=32) converging to Spark's per-job scheduling floor, not
+    * to delta work. A chain of depth d costs d batched actions and a flat
+    * N-view fan-out exactly one. See [[stabilizeFused]].
+    */
+  def stabilizeAll(): Unit = stabilizeFused(relations.keys, views.keys)
+
+  /** The epoch rule of the reference (database.rs:287-336,
+    * instance.rs:173-206) over a dependency CLOSURE: fold recent into
+    * stable, promote the deduplicated staged batch, cascade the deltas down
+    * the view DAG — with ONE Spark action per dependency WAVE materializing
+    * every independent promotion on the frontier (SCALE.md r13 §fanout,
+    * generalized r14). [[evaluate]], [[sql]] and [[stabilizeAll]] all
+    * stabilize here.
     *
-    * Rounds walk the view DAG exactly as cascaded [[evaluate]]s would:
-    * relations first (staging their dependents' deltas), then each round
-    * promotes the staged frontier and stages the NEXT level's deltas, so a
-    * chain of depth d costs d batched actions, and a flat N-view fan-out
-    * exactly one. Shapes the deferred path does not cover (durable stores,
-    * measured-path promotions) fall back inline per instance — identical
-    * semantics, just without the batching.
-    */
-  def stabilizeAll(): Unit =
-    if (sequentialStabilization) {
-      relations.keys.toSeq.sorted.foreach(stabilizeRelation)
-      views.keys.toSeq.sorted.foreach(stabilizeView)
-    } else stabilizeFused(relations.keys, views.keys)
-
-  /** Escape hatch for the spec's sequential-vs-fused property tests: when
-    * set, [[evaluate]]/[[sql]]/[[stabilizeAll]] run the original
-    * per-instance epoch loops ([[stabilizeRelation]]/[[stabilizeView]])
-    * instead of [[stabilizeFused]]. Semantics are identical by contract;
-    * only the job batching differs.
-    */
-  private[graft] var sequentialStabilization = false
-
-  /** Batched stabilization of a dependency CLOSURE — the sequential
-    * per-instance epoch loops fused so that ONE Spark action per
-    * dependency WAVE materializes every INDEPENDENT promotion on the
-    * frontier (SCALE.md r13 §fanout, generalized r14: relations promote
-    * in the same batched rounds as views, and `evaluate`/`sql` ride the
-    * batching too, not just `stabilizeAll`). The walk is topological
-    * (relations, then views in ascending id order — a view can only
-    * depend on earlier-created views), and each deferred promotion is
-    * installed as a PROVISIONAL `recent`
+    * The walk is topological (relations, then views in ascending id order
+    * — a view can only depend on earlier-created views). Each instance
+    * PLANS its promotion ([[Instance.prepareChanged]] — a lazy checkpoint,
+    * no action), installed as a PROVISIONAL `recent`
     * ([[Instance.installOptimistic]]) so the next level's delta plans
     * compose over it lazily; slots whose prepared plan reads another
-    * prepared slot's still-lazy leaf materialize one wave later, so a
-    * chain costs one action per level (exactly the sequential path's
-    * count) while a flat N-instance fan-out still costs one.
+    * prepared slot's still-lazy leaf materialize one wave later. Instances
+    * whose epoch cannot defer (durable stores, the lazy first ingest,
+    * measured-path promotions) complete inline inside the walk.
     *
-    * Semantics match the sequential path exactly:
+    * Delta delivery:
     *  - simultaneous dependee deltas reach a view as ONE staged 3-term
     *    rule application instead of two 1-term ones — same union by the
     *    semi-naive identity δ(L⋈R) = δL⋈Rˢ ∪ Lˢ⋈δR ∪ δL⋈δR;
     *  - dependents OUTSIDE the closure get their delta staged only after
     *    a non-zero commit (their staged plans must never capture a leaf
-    *    a zero-count commit retires), reading the committed recent —
-    *    exactly what the sequential `viewDeltaStep` captures;
-    *  - instances whose epoch cannot defer (durable stores, over-budget
-    *    promotions) run inline inside the walk, exactly as before.
+    *    a zero-count commit retires), reading the committed recent.
+    *
+    * A round that throws (a failing closure in a prepare or a wave
+    * action) rolls back: every prepared-but-uncommitted promotion is
+    * aborted ([[Instance.abortPrepared]] re-stages its batch and condemns
+    * its storage), and the delta steps owed by the round's inline commits
+    * are staged, so a retry after the cause is fixed reaches the same
+    * content with exact counts.
+    *
+    * The per-entry `stabilizing` guards keep a concurrent caller (e.g.
+    * [[graft.streaming.StreamingOps.ivmSink]] stabilizing from a stream's
+    * thread) from walking an instance another walk already holds.
     */
   private def stabilizeFused(rels0: Iterable[String], views0: Iterable[Int]): Unit = {
-    // dependee closure (what sequential stabilizeView recursion reaches)
+    // dependee closure: the views reachable through view dependencies,
+    // plus every relation they or the caller name
     val vset = mutable.SortedSet.empty[Int]
     def addV(id: Int): Unit = views.get(id).foreach { v =>
       if (vset.add(id)) v.dependeeViews.foreach(addV)
@@ -368,7 +330,6 @@ final class CoddSession private (
     val rset = mutable.SortedSet.empty[String]
     rels0.foreach(n => if (relations.contains(n)) rset += n)
     vset.foreach(id => views(id).dependeeRels.foreach(n => if (relations.contains(n)) rset += n))
-    // honor the re-entrancy guards the sequential loops use
     val rs = rset.toSeq.filterNot(relations(_).stabilizing)
     val vs = vset.toSeq.filterNot(views(_).stabilizing)
     rs.foreach(relations(_).stabilizing = true)
@@ -379,6 +340,15 @@ final class CoddSession private (
         s.fold(relations(_).instance, views(_).instance)
       def depsOf(s: Either[String, Int]): SortedSet[Int] =
         s.fold(relations(_).dependents, views(_).dependents)
+      // stage owed delta steps, only where a dependee really changed
+      // (post-commit `hasRecent` is exactly that signal)
+      def stageLive(ids: Iterable[Int]): Unit = ids.foreach { id =>
+        val v = views(id)
+        val live =
+          v.dependeeRels.exists(n => relations.get(n).exists(_.instance.hasRecent)) ||
+            v.dependeeViews.exists(i => views.get(i).exists(_.instance.hasRecent))
+        if (live) viewDeltaStep(id)
+      }
       var continue = true
       while (continue) {
         // dependent views owed a delta step by this round's changes:
@@ -386,24 +356,24 @@ final class CoddSession private (
         // composed 3-term step per view per round); the rest after commit
         val toStage = mutable.SortedSet.empty[Int]
         val prepared = mutable.Buffer.empty[(Either[String, Int], Instance.Prepared[Any])]
+        val counts = mutable.Map.empty[Int, Long]
         var anyWork = false
-        slots.foreach { s =>
-          s.foreach { id => if (toStage.remove(id)) viewDeltaStep(id) }
-          val inst = instOf(s)
-          if (inst.pendingCount > 0 || inst.hasRecent) {
-            anyWork = true
-            inst.prepareChanged() match {
-              case Left(true)  => toStage ++= depsOf(s)
-              case Left(false) => ()
-              case Right(p) =>
-                inst.installOptimistic(p)
-                prepared += ((s, p))
-                toStage ++= depsOf(s)
+        try {
+          slots.foreach { s =>
+            s.foreach { id => if (toStage.remove(id)) viewDeltaStep(id) }
+            val inst = instOf(s)
+            if (inst.pendingCount > 0 || inst.hasRecent) {
+              anyWork = true
+              inst.prepareChanged() match {
+                case Left(true)  => toStage ++= depsOf(s)
+                case Left(false) => ()
+                case Right(p) =>
+                  inst.installOptimistic(p)
+                  prepared += ((s, p))
+                  toStage ++= depsOf(s)
+              }
             }
           }
-        }
-        if (!anyWork) continue = false
-        else {
           // One action per dependency WAVE, not one for everything: a
           // prepared view whose plan READS another slot's still-lazy leaf
           // must not share that leaf's materializing action — two union
@@ -427,7 +397,6 @@ final class CoddSession private (
               })
             wave(i) = if (depWaves.isEmpty) 0 else depWaves.max + 1
           }
-          val counts = mutable.Map.empty[Int, Long]
           prepared.zipWithIndex.groupBy { case (_, i) => wave(i) }
             .toSeq.sortBy(_._1).foreach { case (_, slice) =>
               if (slice.size == 1) {
@@ -445,18 +414,18 @@ final class CoddSession private (
                 u.collect().foreach(r => counts(r.getInt(0)) = r.getLong(1))
               }
             }
+        } catch {
+          case t: Throwable =>
+            prepared.foreach { case (s, p) => instOf(s).abortPrepared(p) }
+            stageLive(toStage)
+            throw t
+        }
+        if (!anyWork) continue = false
+        else {
           prepared.zipWithIndex.foreach { case ((s, p), i) =>
             instOf(s).commitPrepared(p, counts(i))
           }
-          // out-of-closure dependents: stage only when a dependee really
-          // changed (post-commit `hasRecent` is exactly that signal)
-          toStage.foreach { id =>
-            val v = views(id)
-            val live =
-              v.dependeeRels.exists(n => relations.get(n).exists(_.instance.hasRecent)) ||
-                v.dependeeViews.exists(i => views.get(i).exists(_.instance.hasRecent))
-            if (live) viewDeltaStep(id)
-          }
+          stageLive(toStage)
         }
       }
     } finally {

@@ -322,104 +322,110 @@ final class Instance[T](
     *     new tuples the new `recent`;
     *  3. commit the durable manifest and return whether `recent` is non-empty.
     *
-    * Split into [[prepareChanged]] (plan the promotion, no materializing
-    * action) + [[commitPrepared]] (bookkeeping under the caller-computed
-    * count) so [[graft.core.CoddSession.stabilizeAll]] can materialize
-    * MANY instances' promotions in one Spark action; run back-to-back
-    * here, the pair is the exact pre-split epoch (the count over the lazy
-    * checkpoint is the same one fused job).
+    * [[prepareChanged]] plans the promotion and [[commitPrepared]] books
+    * it under a caller-computed count, so [[CoddSession]] can materialize
+    * MANY instances' deferred promotions in one Spark action; run
+    * back-to-back here, the count over the lazy checkpoint is the
+    * promotion's one job. A failed epoch leaves its batches staged.
     */
   def changed(): Boolean = synchronized {
     prepareChanged() match {
       case Left(done) => done
-      case Right(p)   => commitPrepared(p, p.leaf.ds.count())
+      case Right(p) =>
+        try commitPrepared(p, p.leaf.ds.count())
+        catch { case t: Throwable => abortPrepared(p); throw t }
     }
   }
 
   /** Phase 1 of an epoch: fold `recent` (compaction), drain `toAdd`, and
-    * BUILD the promotion. `Right(prepared)` carries a PERSISTED (cache-
-    * manager) leaf whose plan has not compiled or executed at all — the
-    * first action over `prepared.leaf.ds` (a count, possibly unioned with
-    * other instances' counts) executes the promotion and populates the
-    * cache in one pass; the caller must then feed the measured count to
-    * [[commitPrepared]]. `Left(r)` = the epoch completed inline: nothing
-    * was staged, or the shape is one the deferred path does not cover —
-    * durable stores (their materialization is a parquet write, an action
-    * of its own) and non-fusable/over-budget promotions (the measured
-    * path needs its own count before the broadcast-vs-EXCEPT choice) —
-    * all of which run exactly the undeferred epoch.
+    * build the promotion's novel-set plan, chosen once for both storage
+    * policies:
+    *  - into an empty store, the staged batch itself;
+    *  - otherwise, when the fused gate passes, ONE job: the broadcast
+    *    dedup plan ([[broadcastNovelPlan]]) over the staged batch, or over
+    *    its lazy pin. The gate: an engine-internal pre-distinct batch or a
+    *    [[Instance.provablyFusable]] plan fuses directly; an
+    *    [[Instance.estimateUpperBoundSafe]] one is pinned first (a lazy
+    *    checkpoint fixes the ONE evaluation both join sides read); either
+    *    way Catalyst's estimate must be within
+    *    [[Instance.FusedPromoteMaxBytes]]. The non-CBO estimate is an upper
+    *    bound of the usual inputs (scan bytes, unreduced through
+    *    filters/projections), so a small one PROVES the batch
+    *    broadcastable, and a big-but-actually-small batch merely takes the
+    *    measured path, never the reverse.
+    *
+    * Under [[Instance.LocalCheckpoint]] the plan is deferred:
+    * `Right(prepared)` carries its LAZY checkpoint, whose first action (a
+    * count, possibly unioned with other instances' counts) executes the
+    * promotion; the caller then feeds the count to [[commitPrepared]].
+    * Under a [[Instance.ReliableStore]] the plan is written as a durable
+    * batch and committed at once (`Left`). `Left` also covers an empty
+    * `toAdd`, the lazily persisted first ingest ([[firstBatch]]), and the
+    * measured broadcast-or-EXCEPT path ([[promote]]) for plans the gate
+    * refuses. A build that throws re-stages the drained batches.
     */
   private[core] def prepareChanged(): Either[Boolean, Instance.Prepared[T]] = synchronized {
     foldRecent()
     if (toAdd.isEmpty) { commitState(); Left(false) }
     else {
-      // a single pre-distinct batch (the common view-delta epoch) needs no
-      // staged re-distinct; anything else unions and dedups
-      val engineBatch = toAdd.size == 1 && toAdd.head._2
-      val staged =
-        if (engineBatch) toAdd.head._1
-        else
-          (if (toAdd.size == 1) toAdd.head._1
-           else toAdd.map(_._1).reduce(_ union _)).distinct()
+      val drained = toAdd
       toAdd = Vector.empty
-      val direct = engineBatch || Instance.provablyFusable(staged)
-      val pinnedSafe = !direct && Instance.estimateUpperBoundSafe(staged)
-      def inline(): Either[Boolean, Instance.Prepared[T]] = {
-        val r =
-          if (stableBatches.isEmpty) firstBatch(staged)
-          else promote(staged, fusable = direct, pinnedFusable = pinnedSafe)
-        commitState()
-        Left(r)
-      }
-      def estOf(ds: Dataset[T]): Long =
-        try ds.queryExecution.optimizedPlan.stats.sizeInBytes
-          .min(BigInt(Long.MaxValue)).toLong
-        catch { case _: Throwable => -1L }
-      if (policy != Instance.LocalCheckpoint) inline()
-      else if (stableBatches.isEmpty) {
-        // The lazy first ingest stays INLINE (persist+count under the
-        // user's AQE session). Deferring it was tried in r14 and reverted:
-        // the cache's child plan compiles ADAPTIVE, so a dependent's
-        // twin-checkpoint prepare executes the whole ingest eagerly at
-        // RDD-construction time — the exact serialization deferral exists
-        // to remove — and a fully persist-based deferral measured slower
-        // with wild variance on the view family (OPTIMIZATION_r14.md).
-        if (lazyFirstBatch) inline()
-        else
+      try prepare(drained)
+      catch { case t: Throwable => toAdd = drained ++ toAdd; throw t }
+    }
+  }
+
+  private def prepare(
+      drained: Vector[(Dataset[T], Boolean)]): Either[Boolean, Instance.Prepared[T]] = {
+    // a single pre-distinct batch (the common view-delta epoch) needs no
+    // staged re-distinct; anything else unions and dedups
+    val engineBatch = drained.size == 1 && drained.head._2
+    val staged =
+      if (engineBatch) drained.head._1
+      else
+        (if (drained.size == 1) drained.head._1
+         else drained.map(_._1).reduce(_ union _)).distinct()
+    val direct = engineBatch || Instance.provablyFusable(staged)
+    // Catalyst's size estimate of the staged plan; -1 when unavailable
+    lazy val est: BigInt =
+      try staged.queryExecution.optimizedPlan.stats.sizeInBytes
+      catch { case _: Throwable => BigInt(-1) }
+    val emptyStore = stableBatches.isEmpty
+    val local = policy == Instance.LocalCheckpoint
+    if (emptyStore && local && lazyFirstBatch) Left(firstBatch(staged))
+    else if (!emptyStore &&
+      !((direct || Instance.estimateUpperBoundSafe(staged)) &&
+        est >= 0 && est <= Instance.FusedPromoteMaxBytes)) {
+      val r = promote(staged)
+      commitState()
+      Left(r)
+    } else {
+      // A deferred plan compiles under the AQE-OFF twin session: a lazy
+      // checkpoint's toRdd on an ADAPTIVE plan executes every non-result
+      // stage at prepare time (one eager action per view — exactly the
+      // serialization the batched rounds exist to remove); classically
+      // compiled, only the plan's BroadcastExchange futures run at
+      // prepare (they block at RDD construction — an r14 persist-based
+      // variant that deferred even those measured SLOWER with much higher
+      // variance on the view family and was reverted; see
+      // OPTIMIZATION_r14.md). commitPrepared re-homes the materialized
+      // batch to the user's session. A durable write runs under the
+      // user's session directly.
+      def compiled(ds: Dataset[T]): Dataset[T] =
+        if (local) GraftColumnBridge.withSession(ds, Instance.planSession(session)) else ds
+      val pin =
+        if (emptyStore || direct) None else Some(materializeTransient(compiled(staged)))
+      val novel = if (emptyStore) staged else broadcastNovelPlan(pin.map(_.ds).getOrElse(staged))
+      try {
+        if (local)
           Right(Instance.Prepared(
-            materializeTransient(
-              GraftColumnBridge.withSession(staged, Instance.planSession(session))),
-            None, estBytes = estOf(staged)))
-      } else {
-        // mirror [[promote]]'s fused-regime gate exactly: a deferred
-        // promotion must be the same one-job plan the inline path builds
-        val est =
-          if (!direct && !pinnedSafe) BigInt(Long.MaxValue)
-          else
-            try staged.queryExecution.optimizedPlan.stats.sizeInBytes
-            catch { case _: Throwable => BigInt(Long.MaxValue) }
-        if (est > Instance.FusedPromoteMaxBytes) inline()
+            materializeTransient(compiled(novel)), pin,
+            estBytes = est.min(BigInt(Long.MaxValue)).toLong))
         else {
-          // compile the deferred plan under the AQE-OFF twin session: a
-          // lazy checkpoint's toRdd on an ADAPTIVE plan executes every
-          // non-result stage at prepare time (one eager action per view —
-          // exactly the serialization the batched rounds exist to remove);
-          // classically compiled, only the plan's BroadcastExchange
-          // futures run at prepare (they block at RDD construction — an
-          // r14 persist-based variant that deferred even those measured
-          // SLOWER with much higher variance on the view family and was
-          // reverted; see OPTIMIZATION_r14.md). commitPrepared re-homes
-          // the materialized batch to the user's session.
-          val twin = Instance.planSession(session)
-          val pin =
-            if (direct) None
-            else Some(materializeTransient(GraftColumnBridge.withSession(staged, twin)))
-          val novel = broadcastNovelPlan(pin.map(_.ds).getOrElse(staged))
-          Right(Instance.Prepared(
-            materializeTransient(GraftColumnBridge.withSession(novel, twin)),
-            pin, estBytes = est.min(BigInt(Long.MaxValue)).toLong))
+          val leaf = materializeDurable(novel)
+          Left(commitPrepared(Instance.Prepared(leaf, pin), leaf.ds.count()))
         }
-      }
+      } catch { case t: Throwable => pin.foreach(retire); throw t }
     }
   }
 
@@ -438,34 +444,45 @@ final class Instance[T](
     */
   private[core] def installOptimistic(p: Instance.Prepared[T]): Unit = synchronized {
     val ds =
-      if (p.estBytes >= 0 && p.leaf.durableId < 0 && p.leaf.durableId != Instance.CachedLeafId)
+      if (p.estBytes >= 0)
         GraftColumnBridge.withMeasuredStats(
           p.leaf.ds, p.estBytes, math.max(1L, p.estBytes / 16L))
       else p.leaf.ds
-    recentBatch = Some(Run(ds, -1L, p.depth, Vector(p.leaf)))
+    recentBatch = Some(Run(ds, -1L, 0, Vector(p.leaf)))
   }
 
-  /** Phase 2: bookkeeping for a [[prepareChanged]] `Right`, given the
-    * count the caller's action measured. Identical to the tail of the
-    * fused promotion: attach measured stats, retire the epoch-private
-    * pin, install the batch as `recent` (or retire it when empty — also
-    * clearing any [[installOptimistic]] provisional install), commit
-    * the manifest (a no-op here — the deferred path only exists under
-    * [[Instance.LocalCheckpoint]]).
+  /** Phase 2: book a prepared promotion given its materializing count:
+    * re-home the batch to the user's session, attach measured stats,
+    * retire the epoch-private pin, install the batch as `recent` (or
+    * retire it when empty — also clearing any [[installOptimistic]]
+    * provisional install), and commit the manifest.
     */
   private[core] def commitPrepared(p: Instance.Prepared[T], n: Long): Boolean = synchronized {
-    // re-home the materialized checkpoint to the user's session: the
-    // deferred plan compiled under the AQE-off twin, but everything built
-    // OVER this batch from here on must execute under the session the
-    // user configured
+    // a deferred plan compiled under the AQE-off twin, but everything
+    // built OVER this batch from here on must execute under the session
+    // the user configured
     val home = p.leaf.copy(ds = GraftColumnBridge.withSession(p.leaf.ds, session))
     val leaf = measured(home, n)
     p.pin.foreach(retire)
     val result =
-      if (n > 0) { recentBatch = Some(Run(leaf.ds, n, p.depth, Vector(leaf))); true }
+      if (n > 0) { recentBatch = Some(Run(leaf.ds, n, 0, Vector(leaf))); true }
       else { retire(leaf); recentBatch = None; false }
     commitState()
     result
+  }
+
+  /** Undo a [[prepareChanged]] `Right` whose batched action never
+    * committed (the round failed): drop the provisional `recent` and
+    * re-stage the planned novel set — still lazy, so a retry computes it
+    * once the cause is fixed, and dependents' deltas already staged over
+    * it read the same blocks. Those plans may still read the leaf and
+    * the pin, so both are condemned (freed at [[close]]), not retired.
+    */
+  private[core] def abortPrepared(p: Instance.Prepared[T]): Unit = synchronized {
+    recentBatch = None
+    toAdd = (GraftColumnBridge.withSession(p.leaf.ds, session) -> true) +: toAdd
+    p.pin.foreach(condemn)
+    condemn(p.leaf)
   }
 
   /** Epoch step 1: fold `recent` into `stable` under geometric compaction.
@@ -506,30 +523,28 @@ final class Instance[T](
       recentBatch = None
     }
 
-  /** First batch into an empty store. Under a transient policy with
-    * [[lazyFirstBatch]] (base relations ingesting from sources) the batch is
-    * NOT checkpointed — its lineage is one scan + distinct, so copying the
-    * whole input through executor storage buys nothing — but it IS
-    * `persist`ed: the count populates the cache in the same job, the
-    * consumer's plan hits the cached subtree instead of re-running the
-    * distinct, and [[close]]/retirement free it. Net: ONE execution of the
-    * ingest plan for the dominant one-shot ingest-and-query shape.
+  /** The lazy first ingest: a base relation's first batch under a
+    * transient policy is NOT checkpointed — its lineage is one scan +
+    * distinct, so copying the whole input through executor storage buys
+    * nothing — but it IS `persist`ed: the count populates the cache in the
+    * same job, the consumer's plan hits the cached subtree instead of
+    * re-running the distinct, and [[close]]/retirement free it. Net: ONE
+    * execution of the ingest plan for the dominant one-shot
+    * ingest-and-query shape. It stays INLINE (persist+count under the
+    * user's AQE session): deferring it was tried in r14 and reverted —
+    * the cache's child plan compiles ADAPTIVE, so a dependent's deferred
+    * prepare would execute the whole ingest eagerly at RDD-construction
+    * time, and a fully persist-based deferral measured slower with wild
+    * variance on the view family (OPTIMIZATION_r14.md).
     */
-  private def firstBatch(staged: Dataset[T]): Boolean = policy match {
-    case Instance.LocalCheckpoint if lazyFirstBatch =>
-      val cached = staged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val n = cached.count()
-      if (n > 0) {
-        recentBatch = Some(
-          Run(cached, n, Instance.MaxUnionDepth, Vector(Leaf(cached, Instance.CachedLeafId))))
-        true
-      } else { cached.unpersist(false); false }
-    case _ =>
-      val raw = materializeDurable(staged)
-      val n = raw.ds.count()
-      val leaf = measured(raw, n)
-      if (n > 0) { recentBatch = Some(Run(leaf.ds, n, 0, Vector(leaf))); true }
-      else { retire(leaf); false }
+  private def firstBatch(staged: Dataset[T]): Boolean = {
+    val cached = staged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val n = cached.count()
+    if (n > 0) {
+      recentBatch = Some(
+        Run(cached, n, Instance.MaxUnionDepth, Vector(Leaf(cached, Instance.CachedLeafId))))
+      true
+    } else { cached.unpersist(false); false }
   }
 
   /** The delta-proportional dedup plan: stable streams map-side against the
@@ -560,82 +575,36 @@ final class Instance[T](
     nDf.join(broadcast(dupR), anti, "left_anti").as(stagedDf.encoder)
   }
 
-  /** Promote a staged batch into a non-empty store: dedup against stable
-    * and durably materialize only the novel set.
-    *
-    * Two regimes. When Catalyst's size ESTIMATE for the staged plan is
-    * small, the whole promotion is ONE job: the broadcast dedup plan is
-    * built directly over the staged plan (referenced twice — ReuseExchange
-    * dedupes its distinct shuffle) and materialized+counted in one pass.
-    * The estimate without CBO is an upper bound of the usual inputs (scan
-    * bytes, unreduced through filters/projections), so a small estimate
-    * PROVES the batch is broadcastable — no measurement job needed, and a
-    * big-but-actually-small batch merely falls through to the measured
-    * path, never the reverse. Otherwise: materialize + count + measure the
-    * staged batch (job 1), then broadcast-dedup or, for genuinely bulk
-    * loads, full EXCEPT (job 2) — exactly the r6 behavior.
-    *
-    * The fused plan references `staged` TWICE (broadcast build side and
-    * anti-join probe side), so it needs both evaluations to agree AND the
-    * size ESTIMATE to be a trustworthy upper bound. Three regimes:
-    *
-    *  - `fusable` (direct fuse): engine-internal pre-distinct batches
-    *    (deterministic by construction — built over materialized recents)
-    *    and user plans [[Instance.provablyFusable]] certifies (no
-    *    nondeterministic expressions, no Generate/typed-closure nodes) —
-    *    both sides provably evaluate identically, no pinning needed.
-    *  - `pinnedFusable`: plans that CANNOT be certified deterministic
-    *    (typed-closure filters, rand projections) but whose estimate is
-    *    still an upper bound ([[Instance.estimateUpperBoundSafe]] — no
-    *    row- or size-expanding nodes). A LAZY executor-storage checkpoint
-    *    pins exactly one evaluation: the broadcast build job computes and
-    *    caches the blocks, the probe side reads them — same job count as
-    *    the direct fuse, plus only the block writes.
-    *  - everything else (row-expanding plans, estimate unavailable): the
-    *    measured path, which checkpoints + counts staged first — the
-    *    broadcast-vs-EXCEPT choice is then made on MEASURED bytes.
+  /** The measured promotion into a non-empty store, for staged plans the
+    * fused gate of [[prepareChanged]] refuses (row-expanding plans, an
+    * unavailable or over-budget estimate): materialize + count + measure
+    * the staged batch (job 1), then dedup against stable by broadcast or,
+    * for genuinely bulk loads, by full EXCEPT (job 2), and durably
+    * materialize only the novel set. The broadcast-vs-EXCEPT choice is
+    * made on MEASURED bytes.
     */
-  private def promote(
-      staged: Dataset[T],
-      fusable: Boolean,
-      pinnedFusable: Boolean = false): Boolean = {
-    val est =
-      if (!fusable && !pinnedFusable) BigInt(Long.MaxValue)
-      else
-        try staged.queryExecution.optimizedPlan.stats.sizeInBytes
-        catch { case _: Throwable => BigInt(Long.MaxValue) }
-    if (est <= Instance.FusedPromoteMaxBytes) {
-      val pin = if (fusable) None else Some(materializeTransient(staged))
-      val raw = materializeDurable(broadcastNovelPlan(pin.map(_.ds).getOrElse(staged)))
+  private def promote(staged: Dataset[T]): Boolean = {
+    val stagedLeaf = materializeTransient(staged)
+    val stagedCp = stagedLeaf.ds
+    val stagedN = stagedCp.count()
+    if (stagedN == 0) { retire(stagedLeaf); false }
+    else {
+      val stagedBytes = GraftColumnBridge.storageBytes(stagedCp)
+      val broadcastable =
+        if (stagedBytes >= 0) stagedBytes <= Instance.BroadcastPromoteMaxBytes
+        else stagedN <= Instance.BroadcastPromoteMaxRows
+      val novel =
+        if (broadcastable) broadcastNovelPlan(stagedCp)
+        else
+          // Bulk load into a non-empty store: a broadcast would not fit;
+          // fall back to the full anti-join (work ∝ data being loaded).
+          stagedCp.except(stable)
+      val raw = materializeDurable(novel)
       val n = raw.ds.count()
       val leaf = measured(raw, n)
-      // novel is fully materialized by the count; the pin is epoch-private
-      pin.foreach(retire)
+      retire(stagedLeaf)
       if (n > 0) { recentBatch = Some(Run(leaf.ds, n, 0, Vector(leaf))); true }
       else { retire(leaf); false }
-    } else {
-      val stagedLeaf = materializeTransient(staged)
-      val stagedCp = stagedLeaf.ds
-      val stagedN = stagedCp.count()
-      if (stagedN == 0) { retire(stagedLeaf); false }
-      else {
-        val stagedBytes = GraftColumnBridge.storageBytes(stagedCp)
-        val broadcastable =
-          if (stagedBytes >= 0) stagedBytes <= Instance.BroadcastPromoteMaxBytes
-          else stagedN <= Instance.BroadcastPromoteMaxRows
-        val novel =
-          if (broadcastable) broadcastNovelPlan(stagedCp)
-          else
-            // Bulk load into a non-empty store: a broadcast would not fit;
-            // fall back to the full anti-join (work ∝ data being loaded).
-            stagedCp.except(stable)
-        val raw = materializeDurable(novel)
-        val n = raw.ds.count()
-        val leaf = measured(raw, n)
-        retire(stagedLeaf)
-        if (n > 0) { recentBatch = Some(Run(leaf.ds, n, 0, Vector(leaf))); true }
-        else { retire(leaf); false }
-      }
     }
   }
 }
@@ -662,23 +631,18 @@ object Instance {
       depth: Int,
       leaves: Vector[Leaf[T]])
 
-  /** A promotion planned by [[Instance.prepareChanged]] but not yet
-    * materialized: `leaf` is the LAZY transient checkpoint of the novel
-    * set (the caller's action computes and caches it), `pin` the
+  /** A promotion planned by [[Instance.prepareChanged]]: `leaf` is the
+    * novel set's materialization (a LAZY transient checkpoint when
+    * deferred — the caller's action computes and caches it), `pin` the
     * epoch-private staged checkpoint of a non-certified plan (retired at
-    * commit, exactly like the inline fused promotion's pin). `depth` is
-    * the union-lineage depth the committed Run records (MaxUnionDepth for
-    * the cached lazy first ingest — its lineage is intact, so the first
-    * compaction merge must re-materialize). `estBytes` is the staged
-    * plan's size ESTIMATE — [[installOptimistic]] exposes it as
-    * provisional leaf statistics so delta plans staged over the
-    * uncommitted batch see a sane size instead of the unknown-leaf
-    * default.
+    * commit). `estBytes` is the staged plan's size ESTIMATE —
+    * [[installOptimistic]] exposes it as provisional leaf statistics so
+    * delta plans staged over the uncommitted batch see a sane size
+    * instead of the unknown-leaf default.
     */
   private[core] final case class Prepared[T](
       leaf: Leaf[T],
       pin: Option[Leaf[T]],
-      depth: Int = 0,
       estBytes: Long = -1L)
 
   /** Max logical-union lineage depth of a stable run before it is
@@ -694,12 +658,9 @@ object Instance {
     * count logarithmic in epochs at the flattest epoch-cost curve;
     * factor 1 over-compacts (more logical-union folds re-materialize per
     * [[MaxUnionDepth]], costing extra jobs), factor 4 under-compacts
-    * (longer stable chains make every promotion anti-join wider). Kept
-    * as a system property (`graft.compaction.factor`) so the experiment
-    * is re-runnable; production leaves the default.
+    * (longer stable chains make every promotion anti-join wider).
     */
-  val CompactionFactor: Long =
-    sys.props.get("graft.compaction.factor").map(_.toLong).getOrElse(2L)
+  val CompactionFactor: Long = 2L
 
   /** Broadcast budget for the promotion semi-join, against the MEASURED
     * block size of the staged checkpoint (deserialized, i.e. an overestimate

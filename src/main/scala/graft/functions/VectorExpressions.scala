@@ -291,14 +291,4 @@ object VectorExpressions {
   /** Column wrapper: fused unit-normalize + int8-quantize codes. */
   def int8UnitCodes(a: Column): Column =
     GraftColumnBridge.column(Int8UnitCodes(GraftColumnBridge.expression(a)))
-
-  /** Codegen'd L2 norm. */
-  def l2Norm(a: Column): Column =
-    org.apache.spark.sql.functions.sqrt(dotProduct(a, a))
-
-  /** Codegen'd cosine similarity: dot/(‖a‖·‖b‖) — identical formula and
-    * accumulation order to [[graft.ops.Similarity.cosine]].
-    */
-  def cosineSim(a: Column, b: Column): Column =
-    dotProduct(a, b) / (l2Norm(a) * l2Norm(b))
 }

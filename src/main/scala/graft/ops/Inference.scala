@@ -47,13 +47,4 @@ object Inference {
     * hash-gated outputs (threshold on the logit instead).
     */
   def sigmoid(logit: Column): Column = lit(1.0) / (lit(1.0) + exp(-logit))
-
-  /** Frozen-vector model over an embedding column: `bias + w·v` via the
-    * codegen'd [[Similarity.dot]] kernel (sequential double accumulation —
-    * bitwise-replayable as `list_dot_product` against the same literal
-    * weights). The 100 TB shape for "run the distilled classifier over
-    * every embedding": weights ride the plan, the corpus never shuffles.
-    */
-  def vectorLogit(vec: Column, weights: Array[Double], bias: Double): Column =
-    lit(bias) + Similarity.dot(vec, typedLit(weights.toSeq))
 }

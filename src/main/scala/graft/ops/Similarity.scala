@@ -852,7 +852,8 @@ object Similarity {
       // counts on top stays far below 2^127, so the sums are EXACT and
       // order-free — bit-identical to the DECIMAL(38) aggregate
       // (partitioning-invariance is spec-pinned). Null semantics match
-      // the Column form: a null vector, or any null element, poisons the
+      // the Column form: a null vector, any null element, or a vector
+      // shorter than `dim` (its missing elements read as null) poisons the
       // row's dot product and the row contributes nothing anywhere.
       val vLoc = v
       val d = dim
@@ -863,7 +864,7 @@ object Similarity {
           it.foreach { row =>
             if (!row.isNullAt(0)) {
               val arr = row.getSeq[Any](0)
-              var ok = true
+              var ok = arr.length >= d
               var s = 0L
               var j = 0
               while (ok && j < d) {

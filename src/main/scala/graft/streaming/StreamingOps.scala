@@ -30,19 +30,6 @@ object StreamingOps {
         col("n"),
         col("sum_value"))
 
-  /** Gap-based session aggregation via `session_window` — streaming-native
-    * sessionization with merging windows.
-    */
-  def sessionCounts(events: DataFrame, gap: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(
-        col("user_id"),
-        col("session_window.start").as("session_start"),
-        col("n_events"))
-
   /** Stream-static enrichment: join each event against a broadcast
     * dimension table. Stream-static joins are stateless in Structured
     * Streaming — the dim is re-broadcast per micro-batch, so no watermark

@@ -77,38 +77,30 @@ class CoddSessionExtrasSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
-  test("property: stabilizeAll == per-view stabilization over random schedules") {
-    // the batched epoch (one action per DAG round) must be a pure
-    // execution-strategy change: random insert schedules over a join
-    // view AND a dependent view-over-view, one session driven by
-    // stabilizeAll, a twin by sequential evaluate — identical content at
-    // every epoch
+  test("property: stabilizeAll == the model over random schedules") {
+    // random insert schedules over a join view AND a dependent
+    // view-over-view, driven by stabilizeAll: at every epoch each view
+    // holds exactly its full recomputation (CoddModel)
     val genBatch = Gen.listOf(Gen.zip(Gen.choose(0, 5), Gen.choose(0, 20)))
     val genSchedule = Gen.listOfN(3, Gen.zip(genBatch, genBatch))
     val prop = Prop.forAllNoShrink(genSchedule) { schedule =>
-      def build(db: CoddSession) = {
-        val r = db.addRelation[(Int, Int)]("r")
-        val s = db.addRelation[(Int, Int)]("s")
-        val v1 = db.storeView(
-          r.withKey(_._1).join(s.withKey(_._1)).on((k, l, rr) => (k, l._2 + rr._2)))
-        val v2 = db.storeView(v1.select(_._2 % 3 != 1).project(_._2))
-        (r, s, v1, v2)
-      }
-      val seqDb = new CoddSession(spark)
-      seqDb.sequentialStabilization = true // genuine per-instance loops
-      val batDb = new CoddSession(spark)
-      val (sr, ss, sv1, sv2) = build(seqDb)
-      val (br, bs, bv1, bv2) = build(batDb)
+      val db = new CoddSession(spark)
+      val m = new CoddModel
+      val r = db.addRelation[(Int, Int)]("r")
+      val s = db.addRelation[(Int, Int)]("s")
+      val e1 = r.withKey(_._1).join(s.withKey(_._1)).on((k, l, rr) => (k, l._2 + rr._2))
+      val v1 = db.storeView(e1); m.storeView(e1)
+      val e2 = v1.select(_._2 % 3 != 1).project(_._2)
+      val v2 = db.storeView(e2); m.storeView(e2)
       var ok = true
       schedule.foreach { case (rb, sb) =>
-        if (rb.nonEmpty) { seqDb.insert(sr, rb); batDb.insert(br, rb) }
-        if (sb.nonEmpty) { seqDb.insert(ss, sb); batDb.insert(bs, sb) }
-        seqDb.evaluate(sv1).count(); seqDb.evaluate(sv2).count()
-        batDb.stabilizeAll()
-        ok &&= seqDb.evaluateSorted(sv1) == batDb.evaluateSorted(bv1)
-        ok &&= seqDb.evaluateSorted(sv2) == batDb.evaluateSorted(bv2)
+        if (rb.nonEmpty) { db.insert(r, rb); m.insert(r, rb) }
+        if (sb.nonEmpty) { db.insert(s, sb); m.insert(s, sb) }
+        db.stabilizeAll(); m.stabilizeAll()
+        ok &&= db.evaluateSorted(v1) == m.evaluate(v1).toSeq.asInstanceOf[Seq[(Int, Int)]].sorted
+        ok &&= db.evaluateSorted(v2) == m.evaluate(v2).toSeq.asInstanceOf[Seq[Int]].sorted
       }
-      seqDb.close(); batDb.close()
+      db.close()
       ok
     }
     val res = org.scalacheck.Test.check(

@@ -106,17 +106,25 @@ class InstanceSpec extends AnyFunSuite {
   }
 
   test("pinned fused promotion evaluates an uncertifiable staged plan exactly once") {
-    val i = inst
-    i.insert(ds(1, 2, 3)); i.changed(); i.changed() // stable = {1,2,3}
-    val acc = spark.sparkContext.longAccumulator("typedFilterEvals")
-    // TypedFilter closure: impure on purpose — counts its invocations.
-    // Uncertifiable (opaque closure) but estimate-upper-bound-safe, so the
-    // promotion takes the pinned fused path; the lazy checkpoint must pin
-    // ONE evaluation (the old direct fuse would have run it twice).
-    val staged = spark.createDataset(1 to 10).filter { x => acc.add(1); x > 3 }
-    i.insert(staged)
-    assert(i.changed())
-    assert(acc.value == 10L, s"closure ran ${acc.value} times, want one pass over 10 rows")
-    assert(i.recent.collect().sorted.toSeq == (4 to 10))
+    // both storage policies build the same pinned plan: deferred under
+    // LocalCheckpoint, written as a parquet batch under ReliableStore
+    val policies = Seq(
+      Instance.LocalCheckpoint,
+      Instance.ReliableStore(java.nio.file.Files.createTempDirectory("graft_pin_").toString))
+    policies.foreach { policy =>
+      val i = new Instance[Int](spark.emptyDataset[Int], policy)
+      i.insert(ds(1, 2, 3)); i.changed(); i.changed() // stable = {1,2,3}
+      val acc = spark.sparkContext.longAccumulator("typedFilterEvals")
+      // TypedFilter closure: impure on purpose — counts its invocations.
+      // Uncertifiable (opaque closure) but estimate-upper-bound-safe, so the
+      // promotion takes the pinned fused path; the lazy checkpoint must pin
+      // ONE evaluation (the old direct fuse would have run it twice).
+      val staged = spark.createDataset(1 to 10).filter { x => acc.add(1); x > 3 }
+      i.insert(staged)
+      assert(i.changed())
+      assert(acc.value == 10L, s"$policy: closure ran ${acc.value} times, want one pass over 10 rows")
+      assert(i.recent.collect().sorted.toSeq == (4 to 10))
+      i.close()
+    }
   }
 }

@@ -4,11 +4,11 @@ import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[CoddSession.stabilizeAll]] — the batched epoch (one Spark action per
-  * view-DAG round) must be CONTENT-EQUIVALENT to the sequential
-  * per-view stabilization it accelerates: same view contents, same set
-  * semantics, same multi-epoch/multi-level cascade behavior, and the two
-  * paths must interleave freely on one session (a user may mix
-  * `stabilizeAll` epochs with ordinary `evaluate`s).
+  * dependency wave) must give exactly the content of full recomputation
+  * ([[CoddModel]]): same view contents, same set semantics, same
+  * multi-epoch/multi-level cascade behavior, interleaving freely with
+  * ordinary `evaluate`s on one session — while running the action census
+  * pinned below.
   */
 class StabilizeAllSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -58,36 +58,38 @@ class StabilizeAllSpec extends AnyFunSuite {
     db.close()
   }
 
-  test("batched epochs match a sequential twin session exactly (join view)") {
-    val seqDb = fresh
-    seqDb.sequentialStabilization = true // genuine per-instance loops
-    val batDb = fresh
-    def build(db: CoddSession) = {
-      val o = db.addRelation[(Int, Int)]("orders")
-      val c = db.addRelation[(Int, String)]("cust")
-      val v = db.storeView(
-        o.select(_._2 > 100).withKey(_._1)
-          .join(c.withKey(_._1)).on((k, ord, cu) => (k, cu._2, ord._2)))
-      (o, c, v)
-    }
-    val (so, sc, sv) = build(seqDb)
-    val (bo, bc, bv) = build(batDb)
+  /** The join view both model-checked tests build, on `db` and `m`. */
+  private def joinView(db: CoddSession, m: CoddModel) = {
+    val o = db.addRelation[(Int, Int)]("orders")
+    val c = db.addRelation[(Int, String)]("cust")
+    val e = o.select(_._2 > 100).withKey(_._1)
+      .join(c.withKey(_._1)).on((k, ord, cu) => (k, cu._2, ord._2))
+    m.storeView(e)
+    (o, c, db.storeView(e))
+  }
+
+  private def assertModel[T](got: Array[T], want: Set[Any], clue: String): Unit = {
+    assert(got.length == got.toSet.size, s"duplicate rows $clue")
+    assert(got.toSet == want, clue)
+  }
+
+  test("batched epochs match the reference model exactly (join view)") {
+    val db = fresh
+    val m = new CoddModel
+    val (o, c, v) = joinView(db, m)
     val custRows = (1 to 20).map(i => (i, s"c$i"))
     val epochs = Seq(
       (1 to 30).map(i => (i % 20 + 1, i * 10)),
       (1 to 10).map(i => (i, 50 + i * 20)),
       Seq((1, 110), (1, 110), (2, 999))) // dup rows + dup epoch content
-    seqDb.insert(sc, custRows); batDb.insert(bc, custRows)
+    db.insert(c, custRows); m.insert(c, custRows)
     epochs.foreach { batch =>
-      seqDb.insert(so, batch)
-      seqDb.evaluate(sv).count() // sequential stabilization epoch
-      batDb.insert(bo, batch)
-      batDb.stabilizeAll() // batched epoch
-      val s = seqDb.evaluate(sv).collect().toSet
-      val b = batDb.evaluate(bv).collect().toSet
-      assert(b == s, s"batched != sequential after batch of ${batch.size}")
+      db.insert(o, batch); m.insert(o, batch)
+      db.stabilizeAll(); m.stabilizeAll() // batched epoch
+      assertModel(db.evaluate(v).collect(), m.evaluate(v),
+        s"after batch of ${batch.size}")
     }
-    seqDb.close(); batDb.close()
+    db.close()
   }
 
   test("empty deltas and already-stable sessions are a quiet no-op") {
@@ -165,20 +167,10 @@ class StabilizeAllSpec extends AnyFunSuite {
     db.close()
   }
 
-  test("fused evaluate matches a sequential twin across mixed epochs (join view)") {
-    val seqDb = fresh
-    seqDb.sequentialStabilization = true
-    val batDb = fresh
-    def build(db: CoddSession) = {
-      val o = db.addRelation[(Int, Int)]("orders")
-      val c = db.addRelation[(Int, String)]("cust")
-      val v = db.storeView(
-        o.select(_._2 > 100).withKey(_._1)
-          .join(c.withKey(_._1)).on((k, ord, cu) => (k, cu._2, ord._2)))
-      (o, c, v)
-    }
-    val (so, sc, sv) = build(seqDb)
-    val (bo, bc, bv) = build(batDb)
+  test("fused evaluate matches the model across mixed epochs (join view)") {
+    val db = fresh
+    val m = new CoddModel
+    val (o, c, v) = joinView(db, m)
     // BOTH relations receive batches in the SAME epoch — the fused round
     // promotes them together and the view's one staged delta must apply
     // the full 3-term rule (δL⋈Rˢ ∪ Lˢ⋈δR ∪ δL⋈δR)
@@ -187,13 +179,11 @@ class StabilizeAllSpec extends AnyFunSuite {
       ((10 to 25).map(i => (i, s"c$i")), (1 to 10).map(i => (i + 10, 50 + i * 20))),
       (Seq((1, "c1")), Seq((1, 110), (1, 110), (2, 999))))
     epochs.foreach { case (cb, ob) =>
-      seqDb.insert(sc, cb); seqDb.insert(so, ob)
-      batDb.insert(bc, cb); batDb.insert(bo, ob)
-      val s = seqDb.evaluate(sv).collect().toSet
-      val b = batDb.evaluate(bv).collect().toSet
-      assert(b == s, "fused evaluate diverged from the sequential twin")
+      db.insert(c, cb); db.insert(o, ob)
+      m.insert(c, cb); m.insert(o, ob)
+      assertModel(db.evaluate(v).collect(), m.evaluate(v), "fused evaluate diverged from the model")
     }
-    seqDb.close(); batDb.close()
+    db.close()
   }
 
   test("one batched round runs ONE action for a flat 8-view fan-out") {

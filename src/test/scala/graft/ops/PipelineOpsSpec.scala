@@ -487,6 +487,12 @@ class PipelineOpsSpec extends AnyFunSuite {
     val rep = Similarity.pcaPower(axis.repartition(3), "embedding", 2, 4)
       .as[(Long, Long)].collect().sortBy(_._1)
     assert(rep.toSeq == out.toSeq, "partitioning-invariant bits")
+    // a vector shorter than dim is dropped like one with a null element,
+    // never failing the job
+    val ragged = axis.union(Seq((4L, Seq(9.0f))).toDF("vec_id", "embedding"))
+    val rag = Similarity.pcaPower(ragged, "embedding", 2, 4)
+      .as[(Long, Long)].collect().sortBy(_._1)
+    assert(rag.toSeq == out.toSeq, "a short vector contributes nothing")
     // all-zero matrix: degenerate — the start vector survives unchanged
     val zero = Seq((1L, Seq(0.0f, 0.0f))).toDF("vec_id", "embedding")
     val z = Similarity.pcaPower(zero, "embedding", 2, 3)
